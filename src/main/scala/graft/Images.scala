@@ -1415,17 +1415,16 @@ object Images {
   def tagImages(spark: SparkSession, dir: String, vocab: DataFrame, scorer: Scorer,
                 recursive: Boolean = false,
                 genThreshold: Double = 0.55, charThreshold: Double = 0.60): DataFrame = {
-    // persist the logits relation: the plan below references it THREE
-    // times (the ok-filter feeding the tag pipeline — itself read twice
-    // inside Tagging.pipeline — and the final status join), and without
-    // a persist each subtree re-runs the binaryFile scan + decode +
-    // score, tripling the single most expensive stage of the flagship.
-    // The cached relation is (path, 4·nTags B logits, status) — orders
-    // of magnitude smaller than the decode work it saves; it stays
-    // cached until the NEXT tagImages call on the same session (the
-    // handle below) or an explicit releaseScored — so a long-lived
-    // session holds at most ONE scored relation, never an unbounded
-    // LRU-pressure accumulation across repeated invocations.
+    // persist the logits relation: the scan + decode + score stage is
+    // the single most expensive part of the flagship, and a caller that
+    // runs more than one action over the returned frame (a count, then
+    // the side-car sink) must not re-run it. The tag selection below
+    // reads it once, row-locally. The cached relation is (path,
+    // 4·nTags B logits, status) — orders of magnitude smaller than the
+    // decode work it saves; it stays cached until the NEXT tagImages
+    // call on the same session (the handle below) or an explicit
+    // releaseScored — so a long-lived session holds at most ONE scored
+    // relation, never an unbounded accumulation across invocations.
     // release BEFORE persisting the replacement: CacheManager dedupes by
     // canonicalized plan, so a repeat call over the same directory would
     // otherwise no-op its persist and then unpersist the shared entry —
@@ -1458,19 +1457,35 @@ object Images {
             .otherwise(col("status")).as("status"),
           lit(null).cast("string").as("tags"))
       case None =>
-        // python wrap parity: a VALID negative index reads from the end
-        // (numpy probs[-1] = last logit; int("-1") parses as a JSON key)
-        // — the relational join needs the wrapped value, and the scorer
-        // dimension known here makes the wrap a driver-side remap
-        val fitted = vocab.withColumn("tag_idx",
-          when(col("tag_idx") < 0, col("tag_idx") + scorer.nTags)
-            .otherwise(col("tag_idx")))
-        val ok = scored.filter(col("status") === "ok")
-          .select(col("path").as("image_id"), col("logits"))
-        val tags = Tagging.pipeline(ok, fitted, genThreshold, charThreshold)
-        scored.select(col("path"), col("status"))
-          .join(tags.withColumnRenamed("image_id", "path"), Seq("path"), "left")
-          .select(col("path"), col("status"), col("tags"))
+        // every get_tags rule is a function of ONE row's score vector
+        // plus the broadcast-sized vocab, so selection runs row-locally
+        // in one narrow map over `scored`: no posexplode, no shuffle, no
+        // join (Tagging.pipeline stays the relational reference; the
+        // two are pinned equal by ImagesSpec). SelectionProgram wraps
+        // negative indices per row against the vector length, like
+        // numpy's probs[-1].
+        val program = Tagging.SelectionProgram(entries, genThreshold, charThreshold)
+        import spark.implicits._
+        scored.select(col("path"), col("logits").cast("array<double>"), col("status"))
+          .as[(String, Array[Double], String)]
+          .mapPartitions { rows =>
+            rows.map {
+              case (path, logits, "ok") =>
+                // a vector SHORTER than the declared nTags (a mis-declared
+                // scorer; a null vector counts as empty) makes the row's
+                // indexing raise in the reference: numpy's IndexError for
+                // this row, never an ok row with null tags
+                val vec = Option(logits).getOrElse(Array.emptyDoubleArray)
+                Option(program.tags(vec)) match {
+                  case Some(tags) => (path, "ok", tags)
+                  case None => (path,
+                    "error: " + Tagging.overrunError(entries, vec.length).get,
+                    null: String)
+                }
+              case (path, _, status) => (path, status, null: String)
+            }
+          }
+          .toDF("path", "status", "tags")
     }
   }
 

@@ -69,6 +69,13 @@ object Tables {
         }
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
+          // the schema cache is keyed by path, not session: a LongType
+          // ts may be a hit cached by ANOTHER session that took the
+          // NANOS retry above, while this session never tripped it. Set
+          // the conf here too, so every session that loads the file ends
+          // in the same state whichever session cached it first. A no-op
+          // for a plain INT64 column.
+          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
           // FLOOR division, not `div` (truncate-toward-zero): a pre-1970
           // nano timestamp that is not a whole microsecond would
           // otherwise land one microsecond late (the Intervals.scala

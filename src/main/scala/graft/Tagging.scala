@@ -161,12 +161,6 @@ object Tagging {
     concatTags(scores.select(col(idCol).as("image_id")), selected)
   }
 
-  /** A compiled, serializable form of the whole tag-selection program:
-    * per-lane primitive index arrays in emission order, displays
-    * pre-normalized, the meta blacklist applied at BUILD time (it depends
-    * only on the tag name, appV2.py:98). One instance is closed over by
-    * pipelineLocal's partition function — the executor-side equivalent of
-    * the reference's precomputed category index (appV2.py:62-71). */
   /** appV2 parity for a vocabulary that OVERRUNS the model's output
     * dimension (appV2.py:79,92 — `probs[categories[cat]]`): numpy fancy
     * indexing raises IndexError inside the per-image try/except, so
@@ -189,14 +183,20 @@ object Tagging {
       // tags normally.
       .filter(e => Vocab.emissionRank.contains(e.category))
       // python-faithful bounds: negative indices WRAP (int("-1") parses,
-      // numpy probs[-1] is the last logit — see the wrap remap in
-      // tagImages / SelectionProgram.tags); only idx ≥ n or idx < −n
-      // raises
+      // numpy probs[-1] is the last logit — see SelectionProgram.tags);
+      // only idx ≥ n or idx < −n raises
       .filter(e => e.tagIdx >= nOutputs || e.tagIdx < -nOutputs.toLong)
       .sortBy(e => (Vocab.emissionRank(e.category), e.emitPos))
       .headOption
       .map(e => s"index ${e.tagIdx} is out of bounds for axis 0 with size $nOutputs")
 
+  /** A compiled, serializable form of the whole tag-selection program:
+    * per-lane primitive index arrays in emission order, displays
+    * pre-normalized, the meta blacklist applied at BUILD time (it depends
+    * only on the tag name, appV2.py:98). One instance is closed over by
+    * the partition functions of pipelineLocal and Images.tagImages — the
+    * executor-side equivalent of the reference's precomputed category
+    * index (appV2.py:62-71). */
   private[graft] final case class SelectionProgram(
       argmaxLanes: Array[(Array[Int], Array[String])],
       thresholdLanes: Array[(Array[Int], Array[String], Double)],
@@ -220,8 +220,9 @@ object Tagging {
       * Returns NULL when any vocab index overruns the vector — the
       * reference's numpy IndexError fails the whole image (see
       * [[Tagging.overrunError]]); callers represent failure as a null
-      * tags value (the same convention tagImages' left join produces
-      * for decode-failed rows). NEGATIVE indices wrap like numpy
+      * tags value (tagImages turns it into the reference's per-image
+      * IndexError status, the same null-tags convention it uses for
+      * decode-failed rows). NEGATIVE indices wrap like numpy
       * (probs[-1] = last logit) down to −len, below which numpy raises
       * too — before this contract, vec(-1) was an
       * ArrayIndexOutOfBoundsException that killed the whole JOB on one
@@ -377,14 +378,15 @@ object Tagging {
     * oracle mirrors the join, keeping the gate engine-vs-engine exact),
     * while this path and tagImages implement the reference's IndexError
     * row failure — and numpy's NEGATIVE-index wrap (probs[-1] = last
-    * logit): here per row against the vector length, in tagImages as a
-    * driver-side remap of the vocab against the scorer dimension before
-    * the join. Pinned by TaggingSpec and
-    * the tagger_pipeline_local oracle query. A vocab entry whose tag_idx
-    * reaches the score vector's length fails the ROW (null tags) — the
-    * reference's numpy IndexError, see [[overrunError]]; the old silent
-    * skip was reference-unfaithful (holes — an absent vocab row for an
-    * existing output — remain skips, the correct direction).
+    * logit), per row against the vector length. Pinned by TaggingSpec
+    * and the tagger_pipeline_local oracle query. Images.tagImages runs
+    * the same SelectionProgram over its scored relation, so the flagship
+    * path is zero-shuffle too; ImagesSpec pins it against `pipeline`.
+    * A vocab entry whose tag_idx reaches the score vector's length fails
+    * the ROW (null tags) — the reference's numpy IndexError, see
+    * [[overrunError]]; the old silent skip was reference-unfaithful
+    * (holes — an absent vocab row for an existing output — remain skips,
+    * the correct direction).
     *
     * The id column keeps its own family: a STRING id (the image-path ids
     * scoreImages emits — the documented 100 TB wiring) rides a

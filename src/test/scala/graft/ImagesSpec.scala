@@ -1079,6 +1079,74 @@ class ImagesSpec extends SparkSpec {
     Images.releaseScored(spark)
   }
 
+  test("flagship tags equal the relational Tagging.pipeline over the same " +
+      "scoreImages logits (reference-format vocab, both threshold pairs)") {
+    // schema-B mapping exercising every selection edge: a negative key
+    // (numpy wrap: "-1" reads the last logit), a hole (no key 7), an
+    // empty-named quality entry (wins its argmax, emits nothing), a
+    // blacklisted meta tag and an unrecognized category (dropped at load)
+    val special = Map(
+      -1 -> ("wrapped_last", "general"), 3 -> ("", "quality"),
+      5 -> ("commentary_request", "meta"), 9 -> ("odd_one", "unknown_cat"))
+    val cats = Vocab.recognized
+    val json = (Seq(-1) ++ (0 until 31).filterNot(_ == 7)).map { i =>
+      val (tag, cat) = special.getOrElse(i, (s"tag_$i", cats(i % cats.size)))
+      s""""$i": {"tag": "$tag", "category": "$cat"}"""
+    }.mkString("{", ", ", "}")
+    val vocab = Vocab.fromJson(spark, json)
+    assert(vocab.filter(col("tag_idx") === -1).count() === 1)
+    assert(vocab.filter(col("tag_name") === "odd_one").count() === 0)
+    val scorer = Images.FixtureScorer(32)
+    val scored = Images.scoreImages(Images.source(spark, dir), scorer)
+    val ok = scored.filter(col("status") === "ok")
+      .select(col("path").as("image_id"), col("logits"))
+    // the relational join needs the numpy wrap applied to the vocab
+    val wrapped = vocab.withColumn("tag_idx",
+      when(col("tag_idx") < 0, col("tag_idx") + scorer.nTags)
+        .otherwise(col("tag_idx")))
+    for ((gen, char) <- Seq((0.55, 0.60), (0.9, 0.95))) {
+      val expected = Tagging.pipeline(ok, wrapped, gen, char).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val got = Images.tagImages(spark, dir, vocab, scorer,
+          genThreshold = gen, charThreshold = char)
+        .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2)))
+      assert(got.length === 33)
+      val (okRows, failed) = got.partition(_._2._1 == "ok")
+      assert(okRows.map { case (p, (_, t)) => p -> t }.toMap === expected,
+        s"thresholds ($gen, $char)")
+      assert(failed.length === 3 && failed.forall(_._2._2 == null))
+      if (gen == 0.55) assert(expected.values.exists(_.contains("wrapped last")),
+        "the wrapped negative key must be reachable")
+    }
+    Images.releaseScored(spark)
+  }
+
+  test("tagImages (no overrun) executes with zero Exchanges") {
+    val tagged = Images.tagImages(spark, dir, ImageFixtures.vocab(spark),
+      Images.FixtureScorer(32))
+    tagged.collect()
+    val plan = tagged.queryExecution.executedPlan.treeString
+    assert(!plan.contains("Exchange"), plan)
+    Images.releaseScored(spark)
+  }
+
+  test("a scorer whose vectors are shorter than its nTags fails each row " +
+      "with numpy's IndexError, counted as failed") {
+    val tagged = Images.tagImages(spark, dir, ImageFixtures.vocab(spark),
+      ImagesSpec.ShortScorer(nTags = 32, emitted = 16))
+    val (observed, obs) = Images.withRunMetrics(tagged)
+    val rows = observed.collect().map(r => r.getString(0).split('/').last ->
+      ((r.getString(1), r.isNullAt(2)))).toMap
+    // first offending index in get_tags traversal order: the rating
+    // lane (idx 0, 8, 16, 24) indexes before every other category
+    assert(rows("landscape.png") ===
+      (("error: index 16 is out of bounds for axis 0 with size 16", true)))
+    assert(rows.values.forall { case (st, nullTags) => st.startsWith("error:") && nullTags })
+    val m = obs.get
+    assert(m("n_total") === 33L && m("n_ok") === 0L && m("n_failed") === 33L)
+    Images.releaseScored(spark)
+  }
+
   test("tagImages cache lifecycle: one relation per session, released by releaseScored") {
     Images.releaseScored(spark) // settle: drop any relation a prior test's call owns
     val before = spark.sparkContext.getPersistentRDDs.size
@@ -1118,5 +1186,12 @@ class ImagesSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(Paths.get(weird, "has space.txt")), "UTF-8")
       === "tag a, tag b")
     assert(Files.exists(Paths.get(weird, "noext.txt")))
+  }
+}
+
+object ImagesSpec {
+  /** A mis-declared scorer: declares `nTags` outputs, emits fewer. */
+  final case class ShortScorer(nTags: Int, emitted: Int) extends Images.Scorer {
+    def score(t: Array[Float]): Array[Float] = Images.FixtureScorer(emitted).score(t)
   }
 }

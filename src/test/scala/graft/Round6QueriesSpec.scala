@@ -268,6 +268,45 @@ class Round6QueriesSpec extends SparkSpec {
     assert(legacy === canon)
   }
 
+  test("Tables.events: every session loading a TIMESTAMP(NANOS) file gets the " +
+      "legacy conf, whichever session cached its schema (the cache is path-keyed)") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft_ev_nanos_sessions")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val file = dir.resolve("events.parquet").toString
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(file))
+      .withType(schema).build()
+    val nanos = Seq(1L -> 1700000000123456789L, 2L -> -1500L)
+    val groups = new SimpleGroupFactory(schema)
+    try nanos.foreach { case (id, ts) =>
+      writer.write(groups.newGroup().append("event_id", id).append("ts", ts))
+    } finally writer.close()
+    def micros(s: org.apache.spark.sql.SparkSession): Map[Long, Long] =
+      Tables.events(s, dir.toString)
+        .select(col("event_id"), unix_micros(col("ts")))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // floor division: -1500 ns is -2 µs, not -1
+    val expected = Map(1L -> 1700000000123456L, 2L -> -2L)
+    // the first session trips the NANOS retry and caches the schema; the
+    // second hits the cache and never sees the failure that sets the conf
+    val first = spark.newSession()
+    assert(micros(first) === expected)
+    val second = spark.newSession()
+    assert(micros(second) === expected)
+    // both end in the same state: a direct read of the file infers its
+    // schema in the second session too, instead of failing on NANOS
+    for (s <- Seq(first, second)) {
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+      assert(s.read.parquet(file).schema("ts").dataType ===
+        org.apache.spark.sql.types.LongType)
+    }
+  }
+
   test("text_hash_classifier: sigmoid bounds, margin/label consistency, both labels present") {
     val rows = run("text_hash_classifier").collect()
     val nDocs = Tables.documents(spark, sfDir).count()

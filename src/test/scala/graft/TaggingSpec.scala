@@ -240,8 +240,8 @@ class TaggingSpec extends SparkSpec {
     assert(Tagging.overrunError(Seq(
       Vocab.Entry(50, "tag_id_card", "meta", 0)), 32) ===
       Some("index 50 is out of bounds for axis 0 with size 32"))
-    // pipelineLocal: the row fails (null tags), same convention as
-    // tagImages' left join for decode-failed rows
+    // pipelineLocal: the row fails (null tags) — the null-tags
+    // convention tagImages also uses for its failed rows
     val out = Tagging.pipelineLocal(
       Seq((7L, Seq(40.0, 40.0))).toDF("image_id", "logits"), entries)
       .collect()
