@@ -23,7 +23,7 @@ object Tables {
   /** Catalog-style schema cache (r15, the rowCountCache argument): a bare
     * `spark.read.parquet(path)` re-lists the path and re-reads a footer to
     * infer the schema on EVERY call — measured ~50-60 ms of driver time
-    * per call warm (Scratch lat_micro), paid 1-7× per query per bench rep,
+    * per call warm (OPTIMIZATION_r15.md), paid 1-7× per query per bench rep,
     * ~20 s across the 199-query registry. A real deployment reads the
     * schema from its catalog (metastore / Iceberg manifest) instead of
     * re-inferring it per query; the fixtures are immutable for the life of

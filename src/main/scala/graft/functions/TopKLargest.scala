@@ -37,10 +37,9 @@ import scala.collection.mutable
   * no-row group in the oracle dialect.
   *
   * Registered for SQL as `graft_topk` via GraftFunctions.register and
-  * GraftExtensions. Complements plans/TopKPerGroup.scala: that strategy
-  * rewrites WHOLE-ROW top-k (keep the row), this aggregate is the
-  * VALUE-ONLY form usable inside any agg list alongside other
-  * aggregates.
+  * GraftExtensions. Whole-row top-k (keep the row) is the built-in
+  * `row_number() <= k` window; this aggregate is the VALUE-ONLY form
+  * usable inside any agg list alongside other aggregates.
   */
 case class TopKLargest(
     child: Expression,

@@ -223,27 +223,23 @@ object AdvancedQueries extends QueryRegistry {
   // the top-k priorities draws a weighted sample WITHOUT replacement,
   // exactly reproducible on recompute (the data-mixing sampler when
   // "sample 1M docs proportional to quality score" must be re-runnable).
-  // The top-k runs through the repo's own bounded-heap operator
-  // (TopKPerGroup with a constant group): each mapper keeps k rows, the
-  // exchange carries ≤ k rows per input partition, and NO global sort
-  // ever materializes — the only window is the rank assignment over the
-  // 20 surviving rows, partitioned on the constant group key. ln() is
-  // evaluated per row on IDENTICAL doubles in both engines; selection
-  // flips only if two rows' priorities collide within 1 ulp (≈1e-8
-  // probability corpus-wide) — the ranks themselves carry an id
-  // tie-break.
+  // The top-k is one unpartitioned `row_number() <= 20` window, which
+  // Spark plans as TakeOrderedAndProject(limit=20) (a bounded top-20 per
+  // partition, ≤ 20 rows per partition through the single-partition
+  // exchange) under a 20-row Window — NO global sort of the table ever
+  // materializes (PlansSpec pins the shape). ln() is evaluated per row
+  // on IDENTICAL doubles in both engines; selection flips only if two
+  // rows' priorities collide within 1 ulp (≈1e-8 probability
+  // corpus-wide) — the ranks themselves carry an id tie-break.
   private val weightedSample = NamedQuery(
     "q_weighted_sample",
     (spark, d) => {
       val u = TextOps.md5Long(col("o_orderkey")) / lit(1152921504606846976.0) // 2^60
-      val scored = Tables.orders(spark, d)
+      val w = Window.orderBy(desc("priority"), asc("o_orderkey"))
+      Tables.orders(spark, d)
         .withColumn("priority", log(u) / col("o_totalprice"))
-        .withColumn("g", lit(0))
-      val top = graft.plans.TopK.perGroup(scored, Seq("g"),
-        Seq(col("priority").desc, col("o_orderkey").asc), 20)
-      val w = Window.partitionBy("g").orderBy(desc("priority"), asc("o_orderkey"))
-      top
         .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= 20)
         .select(col("rank"), col("o_orderkey"), cents(col("o_totalprice")).as("price_cents"))
         .orderBy("rank")
     },
@@ -475,8 +471,8 @@ object AdvancedQueries extends QueryRegistry {
       // InMemoryRelation paid decompression + ColumnarToRow on every
       // scan through a FRESH codegen class per iteration — measured
       // 6.5–9.1 s executorRunTime per iteration-scan against 0.3–0.7 s
-      // for the same scan over checkpoint-pinned UnsafeRows (Scratch
-      // pr_scan_eager vs pr_lc_scan, sf0.1). The cache's one advantage
+      // for the same scan over checkpoint-pinned UnsafeRows (sf0.1,
+      // OPTIMIZATION_r14.md lesson 1). The cache's one advantage
       // — preserving the src hash-partitioning — buys nothing here:
       // the per-round join broadcasts the (1 row/node) rank relation,
       // so the edge side is never shuffled either way, and the

@@ -163,29 +163,11 @@ object SimilarityQueries extends QueryRegistry {
         |  FROM scored) t
         |WHERE rnk = 1 ORDER BY l1""".stripMargin))
 
-  // ---- Same top-k via the typed bounded-heap Aggregator (ops.TopKByScore):
-  // partial aggregation keeps k rows per group map-side instead of
-  // sorting every candidate in a window — the shuffle carries k·queries
-  // rows. Identical ordering contract → same oracle as sim_cosine_topk.
-  private val bruteAgg = NamedQuery(
-    "sim_cosine_topk_agg",
-    (spark, d) => {
-      val v = vecs(spark, d)
-      val q = v.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
-      val topk = graft.ops.TopKByScore.udafFor(topK)
-      q.crossJoin(v)
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          SimilarityOps.cosineNative6(spark, col("qemb"), col("embedding")).as("cosine"))
-        .groupBy("query_id")
-        .agg(topk(col("neighbor_id"), col("cosine")).as("top"))
-        .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "s")))
-        .select(col("query_id"), (col("pos") + 1).cast("int").as("rnk"),
-          col("s.neighbor_id").as("neighbor_id"), col("s.cosine").as("cosine"))
-        .orderBy("query_id", "rnk")
-    },
-    brute.oracle)
+  // ---- sim_cosine_topk under a second registry name, kept so the
+  // registry and its oracle keys stay unchanged. The window form is
+  // already a bounded top-k (a map-side WindowGroupLimit), so both names
+  // share one pipeline and one oracle.
+  private val bruteAgg = NamedQuery("sim_cosine_topk_agg", brute.fn, brute.oracle)
 
   // ---- ANN quality harness: recall@k of the IVF index against the
   // exact brute-force ranking, per query and fully oracle-checked — the
@@ -325,13 +307,12 @@ object SimilarityQueries extends QueryRegistry {
   // construction, not a fraction), each side's norm is computed ONCE per
   // row BELOW the join (the hoisted-cosine kernel — a third of the
   // per-pair flops of the self-normalizing form, bit-identical results),
-  // and the neighbor cut runs through the engine's TopKPerGroup
-  // bounded-heap operator — each partition surrenders at most k rows per
-  // query to the exchange, so the shuffle carries ≤ k·|queries|·
-  // partitions rows, never the |q|·|train| scored matrix a row_number
-  // window would sort and move wholesale. TopKPerGroup's ordering
-  // contract (NaN-greatest, id tie-break) is pinned equivalent to the
-  // window form by TopKSpec.
+  // and the neighbor cut is a `row_number() <= k` window that Spark plans
+  // as a map-side WindowGroupLimit — each partition surrenders at most k
+  // rows per query to the exchange, so the shuffle carries ≤ k·|queries|·
+  // partitions rows, never the |q|·|train| scored matrix (PlansSpec pins
+  // the shape). Ordering: cosine desc (NaN first, Spark's total order),
+  // neighbor_id tie-break — the oracle's window exactly.
   private val knnClassify = NamedQuery(
     "sim_knn_classify",
     (spark, d) => {
@@ -355,8 +336,11 @@ object SimilarityQueries extends QueryRegistry {
         .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
           SimilarityOps.cosineHoisted6(spark, col("qemb"), col("embedding"),
             col("qnorm"), col("tnorm")).as("cosine"))
-      val neigh = graft.plans.TopK.perGroup(scored, Seq("query_id"),
-        Seq(desc("cosine"), col("neighbor_id")), topK)
+      val wN = Window.partitionBy(col("query_id"))
+        .orderBy(desc("cosine"), col("neighbor_id"))
+      val neigh = scored
+        .withColumn("rnk", row_number().over(wN))
+        .filter(col("rnk") <= topK)
       val wV = Window.partitionBy(col("query_id"))
         .orderBy(desc("n_votes"), col("label"))
       neigh.groupBy(col("query_id"), col("label"))

@@ -1092,10 +1092,10 @@ object TextQueries extends QueryRegistry {
   // is a ≤1024-row feature table (broadcast); corpus cost is one
   // (doc, feature) aggregate feeding both LM fits and the probe join
   // (pinned so the corpus tokenizes once), and no shuffle carries more
-  // than one row per (doc, distinct feature). The top-50 selection runs
-  // through the bounded-heap TopKPerGroup operator — no global sort
-  // anywhere; `selected` is the resampling decision downstream stages
-  // would act on.
+  // than one row per (doc, distinct feature). The top-50 selection is an
+  // ordered limit, which Spark plans as TakeOrderedAndProject (per-
+  // partition bounded top-50, no global sort anywhere); `selected` is the
+  // resampling decision downstream stages would act on.
   private val dsirWeights = NamedQuery(
     "text_dsir_weights",
     (spark, d) => {
@@ -1121,11 +1121,9 @@ object TextQueries extends QueryRegistry {
         .groupBy("doc_id")
         .agg(sum("nf").cast("bigint").as("n_tokens"),
           round(sum(col("nf") * col("lr")), 6).as("logw"))
-        .localCheckpoint() // feeds the TopK cut AND the output join: pin
+        .localCheckpoint() // feeds the top-50 cut AND the output join: pin
                            // (24 B/doc) or the corpus-wide weight agg runs twice
-      val top = graft.plans.TopK.perGroup(
-          weights.withColumn("g", lit(0)), Seq("g"),
-          Seq(col("logw").desc, col("doc_id").asc), 50)
+      val top = weights.orderBy(col("logw").desc, col("doc_id").asc).limit(50)
         .select(col("doc_id"), lit(1).as("selected"))
       weights.join(broadcast(top), Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_tokens"), col("logw"),
@@ -1429,9 +1427,10 @@ object TextQueries extends QueryRegistry {
   // diagnostic that flags machine-generated / template-heavy slices
   // (natural language sits near slope −1; generated spam flattens or
   // steepens it). Scale shape: term frequencies are one partial-agg
-  // shuffle on (lang, term); the top-100 cut runs through the custom
-  // TopKPerGroup operator (bounded heaps per partition — no vocab-sized
-  // window sort anywhere); the regression then sees ≤ 100 rows per
+  // shuffle on (lang, term); the top-100 cut is a `row_number() <= 100`
+  // window that Spark plans as a map-side WindowGroupLimit (bounded per
+  // partition — no vocab-sized shuffle), and the same row_number is the
+  // regression's rank; the regression then sees ≤ 100 rows per
   // language. Determinism: freq/rank are exact integers → ln() is
   // bit-identical; regr_slope over ≤ 100 points reassociates within
   // ~1e-14, absorbed by round(4).
@@ -1441,11 +1440,10 @@ object TextQueries extends QueryRegistry {
       val tf = Tables.documents(spark, d)
         .select(col("lang"), explode(TextOps.words(col("text"))).as("term"))
         .groupBy("lang", "term").agg(count(lit(1)).as("freq"))
-      val top = graft.plans.TopK.perGroup(tf, Seq("lang"),
-        Seq(col("freq").desc, col("term").asc), 100)
-      top
+      tf
         .withColumn("rank", row_number().over(
           Window.partitionBy("lang").orderBy(desc("freq"), col("term"))))
+        .filter(col("rank") <= 100)
         .groupBy("lang")
         .agg(round(regr_slope(log(col("freq").cast("double")),
             log(col("rank").cast("double"))), 4).as("zipf_slope"),

@@ -161,20 +161,25 @@ class FunctionsSpec extends SparkSpec {
     assert(ok === 1.0)
   }
 
-  test("TopKByScore ranks a NaN cosine first, matching Spark SQL desc() semantics") {
-    import graft.ops.{ScoredNeighbor, TopKByScore}
+  test("top-k window ranks a NaN cosine first, matching Spark SQL desc() semantics") {
+    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val rows = Seq(
-      ScoredNeighbor(1L, 0.9), ScoredNeighbor(2L, Double.NaN),
-      ScoredNeighbor(3L, 0.95), ScoredNeighbor(4L, 0.1))
-    val agg = rows.toDS().select(TopKByScore.udafFor(2)(col("neighbor_id"), col("cosine")))
-      .as[Seq[ScoredNeighbor]].collect().head
-    // Spark SQL total order: NaN > every double → NaN first under DESC
-    assert(agg.map(_.neighbor_id) === Seq(2L, 3L))
-    // cross-check against the windowed/desc form the aggregator claims to match
-    val windowed = rows.toDF().orderBy(desc("cosine"), col("neighbor_id"))
-      .limit(2).collect().map(_.getLong(0)).toSeq
-    assert(windowed === agg.map(_.neighbor_id))
+    // sim_cosine_topk's cut: row_number over (cosine DESC, neighbor_id)
+    // per query. A zero-norm embedding scores NaN, and Spark SQL's total
+    // order puts NaN above every double — it must rank FIRST, not drop
+    // out of the top-k
+    val rows = Seq((7L, 1L, 0.9), (7L, 2L, Double.NaN), (7L, 3L, 0.95), (7L, 4L, 0.1))
+      .toDF("query_id", "neighbor_id", "cosine")
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(desc("cosine"), col("neighbor_id"))
+    val topk = rows.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= 2).orderBy("rnk")
+      .collect().map(_.getAs[Long]("neighbor_id")).toSeq
+    assert(topk === Seq(2L, 3L))
+    // cross-check against the ordered-limit form
+    val limited = rows.orderBy(desc("cosine"), col("neighbor_id"))
+      .limit(2).collect().map(_.getAs[Long]("neighbor_id")).toSeq
+    assert(limited === topk)
   }
 
   test("participates in whole-stage codegen (no CodegenFallback)") {

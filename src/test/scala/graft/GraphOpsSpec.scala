@@ -80,16 +80,30 @@ class GraphOpsSpec extends SparkSpec {
       "identical results when the rank/frontier side cannot broadcast") {
     // VERDICT r14 #2-wrong: with the threshold forced below any relation,
     // the size-aware hint cannot fire and the kernels switch to the
-    // src-partitioned cached edge pin. Results must be bit-identical.
+    // src-partitioned cached edge pin. Results must match.
     // An isolated newSession keeps the shared session's conf untouched
     // (suites run concurrently on one session).
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
     val dir = "/root/testdata/sf0.001"
+    // field by field: the two physical plans sum PageRank contributions
+    // in different orders, and q_pagerank rounds ranks to 8 decimals, so
+    // a sum next to a rounding boundary can land one unit (1e-8) apart —
+    // doubles compare within 2e-8 (one unit plus float slack), every
+    // other field exactly
+    def sameField(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => math.abs(x - y) < 2e-8
+      case _ => a == b
+    }
     for (q <- Seq("q_pagerank", "q_bfs_hops")) {
-      val want = SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted
-      val got = SparkEntry.queries(q)(s2, dir).collect().map(_.toString).sorted
-      assert(got.toSeq === want.toSeq, s"$q diverges above the threshold")
+      val want = SparkEntry.queries(q)(spark, dir).collect().sortBy(_.toString)
+      val got = SparkEntry.queries(q)(s2, dir).collect().sortBy(_.toString)
+      assert(got.length === want.length, s"$q row count diverges above the threshold")
+      got.zip(want).foreach { case (g, w) =>
+        assert(g.length === w.length &&
+          (0 until g.length).forall(i => sameField(g.get(i), w.get(i))),
+          s"$q diverges above the threshold: $g vs $w")
+      }
     }
   }
 }

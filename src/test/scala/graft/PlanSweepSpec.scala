@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans._
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
@@ -80,8 +80,18 @@ class PlanSweepSpec extends SparkSpec {
         markBounded(b.child) // executed plans carry the explicit exchange
       case _ => ()
     }
+    // A window fed by a top-k limit (TakeOrderedAndProject, the plan of
+    // an unpartitioned `row_number() <= k`) sees at most k rows: the
+    // limit is the same cardinality collapse markBounded stops at, seen
+    // from above. Only row-preserving nodes may sit in between.
+    def overLimit(n: SparkPlan): Boolean = n match {
+      case _: TakeOrderedAndProjectExec => true
+      case _: ProjectExec | _: FilterExec | _: SortExec => overLimit(n.children.head)
+      case _ => false
+    }
     p.foreach {
-      case w: WindowExec if w.partitionSpec.isEmpty && !bounded.contains(w) =>
+      case w: WindowExec if w.partitionSpec.isEmpty && !bounded.contains(w) &&
+          !overLimit(w.child) =>
         out += "unpartitioned WindowExec"
       case w: WindowGroupLimitExec if w.partitionSpec.isEmpty && !bounded.contains(w) =>
         out += "unpartitioned WindowGroupLimitExec"
@@ -190,6 +200,24 @@ class PlanSweepSpec extends SparkSpec {
       .exists(_.startsWith("unpartitioned Window")),
       "corpus-wide window below an aggregate on a broadcast build side " +
         "must still be flagged")
+  }
+
+  test("a window over a top-k limit is exempt; the same window over the " +
+      "corpus is still flagged") {
+    import org.apache.spark.sql.functions.{col, row_number}
+    import org.apache.spark.sql.expressions.Window
+    val orders = Tables.orders(spark, "/root/testdata/sf0.001")
+    val w = Window.orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    // row_number() <= 20 plans as a Window over TakeOrderedAndProject(20)
+    val topk = orders.withColumn("rk", row_number().over(w)).filter(col("rk") <= 20)
+    assert(!offenders(topk.queryExecution.sparkPlan)
+      .exists(_.startsWith("unpartitioned Window")),
+      "a window over the 20 rows of a top-k limit must stay exempt")
+    // no limit: the whole corpus runs through one window task
+    val full = orders.withColumn("rk", row_number().over(w))
+    assert(offenders(full.queryExecution.sparkPlan)
+      .exists(_.startsWith("unpartitioned Window")),
+      "a corpus-wide unpartitioned window must still be flagged")
   }
 
   // ---- repeated-subtree execution sweep (VERDICT r10 #5): two round-10

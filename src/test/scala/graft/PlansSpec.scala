@@ -1,73 +1,17 @@
 package graft
 
-import graft.plans.SigmoidThresholdRewrite
 import org.apache.spark.sql.functions._
 
-/** The sigmoid→logit filter rewrite: plan actually loses its exp(), and
-  * results are unchanged on the fixture pipeline. */
+/** Plan-shape pins: the built-in Spark mechanisms the engine's queries
+  * rely on at scale (rank-limit pushdown, ordered-limit top-k, skew
+  * splits, partition reuse, runtime filters, DPP) actually engage. */
 class PlansSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRule[A](f: => A): A = {
-    spark.experimental.extraOptimizations = Seq(SigmoidThresholdRewrite)
-    try f finally spark.experimental.extraOptimizations = Nil
-  }
-
-  test("threshold filter loses exp() under the rule") {
-    // a non-local source so ConvertToLocalRelation can't pre-evaluate
-    def frame = spark.range(10)
-      .withColumn("logit", (col("id") - 5).cast("double"))
-      .filter(Tagging.clippedSigmoid(col("logit")) >= lit(0.55))
-    val before = frame.queryExecution.optimizedPlan.toString
-    assert(before.toLowerCase.contains("exp("))
-    withRule {
-      val df2 = frame
-      val plan2 = df2.queryExecution.optimizedPlan.toString
-      assert(!plan2.toLowerCase.contains("exp("))
-      // σ(id−5) ≥ 0.55 ⟺ id−5 ≥ logit(0.55) ≈ 0.2007 ⟺ id ≥ 6
-      assert(df2.select("id").collect().map(_.getLong(0)).sorted ===
-        Array(6L, 7L, 8L, 9L))
-    }
-  }
-
-  test("all eight comparison spellings rewrite (strict/non-strict, both orientations)") {
-    // σ is strictly monotone, so every spelling is equally rewriteable —
-    // a user writing `> t` instead of `>= t` must not silently keep the
-    // per-row exp() on the hot path
-    def frame(pred: org.apache.spark.sql.Column) = spark.range(10)
-      .withColumn("logit", (col("id") - 5).cast("double")).filter(pred)
-    val s = Tagging.clippedSigmoid(col("logit"))
-    val t = lit(0.55)
-    val cases: Seq[(org.apache.spark.sql.Column, Seq[Long])] = Seq(
-      (s >= t, Seq(6L, 7L, 8L, 9L)), (s > t, Seq(6L, 7L, 8L, 9L)),
-      (s < t, Seq(0L, 1L, 2L, 3L, 4L, 5L)), (s <= t, Seq(0L, 1L, 2L, 3L, 4L, 5L)),
-      (t > s, Seq(0L, 1L, 2L, 3L, 4L, 5L)), (t >= s, Seq(0L, 1L, 2L, 3L, 4L, 5L)),
-      (t < s, Seq(6L, 7L, 8L, 9L)), (t <= s, Seq(6L, 7L, 8L, 9L)))
-    withRule {
-      for ((pred, want) <- cases) {
-        val df = frame(pred)
-        assert(!df.queryExecution.optimizedPlan.toString.toLowerCase.contains("exp("),
-          s"spelling $pred kept its exp()")
-        assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq === want)
-      }
-    }
-  }
-
-  test("full tagging pipeline results unchanged under the rule") {
-    val vocab = Tagging.syntheticVocab(spark, 64)
-    def run() = Tagging.pipeline(
-      graft.queries.TaggerQueries.scoresFromEmbeddings(spark, "/root/testdata/sf0.001"),
-      vocab).orderBy("image_id").collect().toSeq
-    val base = run()
-    val rewritten = withRule(run())
-    assert(base === rewritten)
-  }
-
-  test("GraftExtensions registers the rule + native functions on a SparkSessionExtensions") {
+  test("GraftExtensions registers the native functions on a SparkSessionExtensions") {
     // the spark.sql.extensions entry point: injection must succeed on a
-    // fresh extensions container (full-session wiring is exercised via
-    // experimental.extraOptimizations above — same rule object), and the
-    // injected graft_cosine builder must construct the native expression
+    // fresh extensions container, and the injected graft_cosine builder
+    // must construct the native expression
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.plans.GraftExtensions().apply(ext)
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -76,20 +20,6 @@ class PlansSpec extends SparkSpec {
     val built = graft.functions.CosineSimilarity(arr, arr)
     assert(built.checkInputDataTypes() ===
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess)
-  }
-
-  test("rule leaves out-of-clip-range thresholds alone (σ saturates)") {
-    val df = Seq((1L, 31.0), (2L, 35.0)).toDF("id", "logit")
-      .filter(Tagging.clippedSigmoid(col("logit")) >= lit(1.0 - 1e-14))
-    withRule {
-      val df2 = Seq((1L, 31.0), (2L, 35.0)).toDF("id", "logit")
-        .filter(Tagging.clippedSigmoid(col("logit")) >= lit(1.0 - 1e-14))
-      // σ(clip(x)) caps at σ(30) < 1-1e-14: both rows must be filtered out,
-      // which the naive algebraic rewrite (x >= logit(t)≈32.2 keeps id=2...
-      // wait, logit(1-1e-14)≈32.2 > 31 but < 35) would get WRONG for id=2.
-      // The in-range guard keeps the original semantics.
-      assert(df2.count() === 0)
-    }
   }
 
   test("AQE splits a skewed sort-merge join partition (the residual skew guard)") {
@@ -245,14 +175,18 @@ class PlansSpec extends SparkSpec {
     }
   }
 
-  test("CDC compaction plans a map-side WindowGroupLimit before its one shuffle") {
-    // rank-limit pushdown: the row_number()=1 filter must compact the
-    // changelog BEFORE the exchange — shuffling ~one row per key, not
-    // the raw change stream (PLANS.md §q_cdc_apply)
-    val plan = SparkEntry.queries("q_cdc_apply")(spark, "/root/testdata/sf0.001")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"),
-      s"no WindowGroupLimit (rank-limit pushdown) in CDC plan:\n$plan")
+  test("rank-limit queries plan a map-side WindowGroupLimit before their shuffle") {
+    // rank-limit pushdown: the row_number() filter must cut each group
+    // to its k survivors BEFORE the exchange (Partial) and again after
+    // it (Final) — shuffling at most k rows per group per partition, not
+    // the raw input (PLANS.md §q_cdc_apply; the grouped top-k queries)
+    for (q <- Seq("q_cdc_apply", "q_topk_per_group", "sim_knn_classify",
+        "text_zipf_slope")) {
+      val plan = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        .queryExecution.executedPlan.toString
+      assert("WindowGroupLimit .* Partial".r.findFirstIn(plan).isDefined,
+        s"no map-side WindowGroupLimit (rank-limit pushdown) in $q plan:\n$plan")
+    }
   }
 
   test("skyline plans a broadcast anti-join, never a pair materialization") {
@@ -264,17 +198,23 @@ class PlansSpec extends SparkSpec {
       s"skyline materialized a cartesian pair relation:\n$plan")
   }
 
-  test("weighted sample plans a bounded top-k heap, no global sort of the table") {
-    // the top-20 selection runs through the TopKPerGroup partial/final
-    // exec pair (per-partition bounded heaps, exchange carries ≤ k rows
-    // per partition) — the raw table is never globally sorted; only the
-    // 20 survivors meet the rank window, which is PARTITIONED (on the
-    // constant group) so no "No Partition Defined" WindowExec exists
+  test("weighted sample plans a bounded top-20, no global sort of the table") {
+    // the unpartitioned row_number() <= 20 window plans as
+    // TakeOrderedAndProject(limit=20) under a 20-row Window: each
+    // partition keeps its top 20, and the only Sort (the final
+    // orderBy("rank")) sits above the cut, over ≤ 20 rows
+    import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val plan = SparkEntry.queries("q_weighted_sample")(spark, "/root/testdata/sf0.001")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerGroupPartial") && plan.contains("TopKPerGroup 20"),
-      s"no bounded top-k heap pair in weighted-sample plan:\n$plan")
-    assert(!plan.contains("windowspecdefinition()"),
-      s"unpartitioned window in weighted-sample plan:\n$plan")
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+    assert(plan.toString.contains("TakeOrderedAndProject(limit=20"),
+      s"no bounded top-20 in weighted-sample plan:\n$plan")
+    val fullSorts = plan.collect {
+      case s: SortExec if s.collectFirst { case t: TakeOrderedAndProjectExec => t }.isEmpty => s
+    }
+    assert(fullSorts.isEmpty, s"full-table Sort in weighted-sample plan:\n$plan")
   }
 }

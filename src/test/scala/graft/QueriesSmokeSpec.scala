@@ -43,8 +43,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * ROUND or per CONSUMER, blowing well past the band. Regeneration
   * takes max(observed, committed) per column so a lucky fast run can
   * never re-tighten a budget below a previously observed legitimate
-  * run (ADVICE r14 #1); set GRAFT_REGEN_JOB_BUDGETS=fresh to drop the
-  * floor after a deliberate plan improvement that lowers counts. */
+  * run (ADVICE r14 #1), and it refuses — failing without writing the
+  * file — when an observed value is past the gate's own band over its
+  * committed budget, so a regression cannot be ratcheted in silently;
+  * set GRAFT_REGEN_JOB_BUDGETS=fresh to write exact observed counts
+  * after a deliberate plan change (lower OR higher). */
 class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -96,6 +99,33 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private def shuffleBytesOver(actual: Long, budget: Long): Boolean =
     actual > budget + (budget / 4) + 65536L
 
+  /** THE budget comparison, shared by the gate and by default
+    * regeneration: why `actual` (jobs, stages, shuffle bytes) is past
+    * the band over `budget`, or None when it is within it. +1 job / +2
+    * stages is the AQE rematerialization variance band (see class
+    * scaladoc); real regressions scale with rounds or consumers and blow
+    * past it. */
+  private def overBudget(name: String, actual: (Int, Int, Long),
+                         budget: (Int, Int, Long)): Option[String] = {
+    val (j, s, b) = actual
+    val (bj, bs, bb) = budget
+    if (j > bj + 1 || s > bs + 2)
+      Some(s"$name: jobs $j (budget $bj + 1), executed stages $s (budget $bs + 2)")
+    else if (shuffleBytesOver(b, bb))
+      Some(s"$name: shuffle-write $b bytes (budget $bb + 25% band) — a " +
+        "broadcast fell back to shuffle, a partial agg disengaged, or " +
+        "the exchange got wider")
+    else None
+  }
+
+  private def readBudgets(): Map[String, (Int, Int, Long)] =
+    scala.jdk.CollectionConverters.IteratorHasAsScala(
+      Files.lines(budgetPath).iterator).asScala
+      .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
+        val Array(n, j, s, b) = line.split(" ")
+        n -> ((j.toInt, s.toInt, b.toLong))
+      }.toMap
+
   // registered at construction so every test (and a filtered testOnly -z
   // run) records counts; removed in afterAll — the session is shared
   // per-JVM, so a listener left behind would accumulate one copy per
@@ -107,6 +137,12 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     super.afterAll()
   }
 
+  /** (jobs, executed stages, shuffle-write bytes) recorded for `tag`. */
+  private def observed(tag: String): (Int, Int, Long) =
+    (Option(jobsByQuery.get(tag)).map(_.get).getOrElse(0),
+      Option(stagesByQuery.get(tag)).map(_.get).getOrElse(0),
+      Option(shuffleBytesByQuery.get(tag)).map(_.get).getOrElse(0L))
+
   /** Run `body` under an attributed job group, flush the listener bus,
     * and return (jobs, executed stages) recorded for it. */
   private def measured(tag: String)(body: => Unit): (Int, Int) = {
@@ -115,8 +151,8 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       interruptOnCancel = false)
     try body finally sc.clearJobGroup()
     GraftTestShims.waitListenerBusEmpty(sc)
-    (Option(jobsByQuery.get(tag)).map(_.get).getOrElse(0),
-      Option(stagesByQuery.get(tag)).map(_.get).getOrElse(0))
+    val (j, s, _) = observed(tag)
+    (j, s)
   }
 
   test("entry returns rows (driver smoke contract)") {
@@ -180,11 +216,8 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // both sections: bare names are the sf0.001 full-registry sweep,
     // `sf0.01:`-prefixed names the second-SF top-20 sweep
     val names = SparkEntry.queries.keySet ++ sf01Names.map(sf01Prefix + _)
-    val actual: Map[String, (Int, Int, Long)] = names.iterator.map { n =>
-      n -> ((Option(jobsByQuery.get(n)).map(_.get).getOrElse(0),
-        Option(stagesByQuery.get(n)).map(_.get).getOrElse(0),
-        Option(shuffleBytesByQuery.get(n)).map(_.get).getOrElse(0L)))
-    }.toMap
+    val actual: Map[String, (Int, Int, Long)] =
+      names.iterator.map(n => n -> observed(n)).toMap
     // a filtered run (testOnly -z) records nothing for skipped queries —
     // only judge what actually ran in this suite instance
     val ran = actual.filter(_._2._1 > 0)
@@ -200,16 +233,20 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         s"budget regeneration needs a full-suite run; ran ${ran.size}/${names.size}")
       // default regen keeps committed values as a floor (max per column)
       // so scheduler-variance can't silently re-tighten a budget below a
-      // previously observed run and re-arm the flake (ADVICE r14 #1);
-      // `fresh` writes exact observed counts for deliberate plan wins
+      // previously observed run and re-arm the flake (ADVICE r14 #1),
+      // and refuses to raise a budget past the gate's band; `fresh`
+      // writes exact observed counts for deliberate plan changes
       val floor: Map[String, (Int, Int, Long)] =
         if (regenMode.contains("fresh") || !Files.exists(budgetPath)) Map.empty
-        else scala.jdk.CollectionConverters.IteratorHasAsScala(
-          Files.lines(budgetPath).iterator).asScala
-          .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-            val Array(n, j, s, b) = line.split(" ")
-            n -> ((j.toInt, s.toInt, b.toLong))
-          }.toMap.filter { case (n, _) => names.contains(n) }
+        else readBudgets().filter { case (n, _) => names.contains(n) }
+      val raised = ran.toSeq.sortBy(_._1).flatMap { case (n, obs) =>
+        floor.get(n).flatMap(overBudget(n, obs, _))
+      }
+      assert(raised.isEmpty,
+        s"\nnot writing $budgetPath: ${raised.size} observed values are past " +
+          s"the gate's band over their committed budgets (rerun with " +
+          s"GRAFT_REGEN_JOB_BUDGETS=fresh only if the plan change is " +
+          s"deliberate):\n${raised.mkString("\n")}")
       val body = ran.toSeq.sortBy(_._1)
         .map { case (n, (j, s, b)) =>
           val (fj, fs, fb) = floor.getOrElse(n, (0, 0, 0L))
@@ -223,31 +260,15 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } else {
       assert(Files.exists(budgetPath),
         s"$budgetPath missing — regenerate with GRAFT_REGEN_JOB_BUDGETS=1")
-      val budget: Map[String, (Int, Int, Long)] =
-        scala.jdk.CollectionConverters.IteratorHasAsScala(
-          Files.lines(budgetPath).iterator).asScala
-          .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-            val Array(n, j, s, b) = line.split(" ")
-            n -> ((j.toInt, s.toInt, b.toLong))
-          }.toMap
+      val budget = readBudgets()
       val stale = budget.keySet -- names
       assert(stale.isEmpty,
         s"budgets for queries no longer in the registry (regenerate): $stale")
       val missing = ran.keySet -- budget.keySet
       assert(missing.isEmpty,
         s"queries without a committed job budget (regenerate): $missing")
-      val over = ran.toSeq.sortBy(_._1).flatMap { case (n, (j, s, b)) =>
-        val (bj, bs, bb) = budget(n)
-        // +1 job / +2 stages: the AQE rematerialization variance band
-        // (see class scaladoc); real regressions scale with rounds or
-        // consumers and blow past it
-        if (j > bj + 1 || s > bs + 2)
-          Some(s"$n: jobs $j (budget $bj + 1), executed stages $s (budget $bs + 2)")
-        else if (shuffleBytesOver(b, bb))
-          Some(s"$n: shuffle-write $b bytes (budget $bb + 25% band) — a " +
-            "broadcast fell back to shuffle, a partial agg disengaged, or " +
-            "the exchange got wider")
-        else None
+      val over = ran.toSeq.sortBy(_._1).flatMap { case (n, obs) =>
+        overBudget(n, obs, budget(n))
       }
       assert(over.isEmpty,
         s"\n${over.size} queries ran more Spark work than their committed " +
@@ -274,6 +295,38 @@ class QueriesSmokeSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "comparator blind to a 2x shuffle growth")
     assert(!shuffleBytesOver(recorded + recorded / 10, recorded),
       "comparator flags 10% codec noise — band too tight")
+  }
+
+  test("the budget comparator fires for real (gate and regeneration)") {
+    import org.apache.spark.sql.functions.{col, sum}
+    // one function judges both the gate and default regeneration, so a
+    // regeneration can only raise a budget by as much as the gate would
+    // have let pass anyway. Real listener counts: the same shuffling
+    // query run once is the budget, run three times (3 jobs for 1, 2x
+    // the stages and bytes) must be flagged
+    def base() = Tables.orders(spark, sfDir)
+      .groupBy(col("o_custkey")).agg(sum(col("o_totalprice")).as("v"))
+    measured("selftest-budget-once") { base().count() }
+    measured("selftest-budget-thrice") {
+      val b = base(); b.count(); b.count(); b.count()
+    }
+    val once = observed("selftest-budget-once")
+    val thrice = observed("selftest-budget-thrice")
+    assert(overBudget("q", once, once).isEmpty, "flags an exact match")
+    assert(overBudget("q", thrice, once).nonEmpty,
+      s"blind to a tripled workload: $thrice over budget $once")
+    // band edges on each column separately
+    val budget = (10, 20, 1000000L)
+    assert(overBudget("q", (11, 22, 1200000L), budget).isEmpty,
+      "flags growth inside the band (+1 job, +2 stages, +20% bytes)")
+    assert(overBudget("q", (12, 20, 1000000L), budget).exists(_.contains("jobs 12")),
+      "blind to +2 jobs")
+    assert(overBudget("q", (10, 23, 1000000L), budget).exists(_.contains("stages 23")),
+      "blind to +3 stages")
+    assert(overBudget("q", (10, 20, 2000000L), budget).exists(_.contains("shuffle-write")),
+      "blind to a 2x shuffle growth")
+    // a lower observation is never "over": fresh-regeneration territory
+    assert(overBudget("q", (1, 1, 0L), budget).isEmpty)
   }
 
   test("plan hygiene: no query plans an un-broadcast CartesianProduct") {
