@@ -197,13 +197,16 @@ object Bench {
   /** One full timed pass over the registry plus its own adjudication
     * evidence: the md5 probe bracketing it and the foreign-CPU tally
     * over exactly the timed window. Re-runnable so the foreign-CPU
-    * gate below can refuse a contended pass and capture again. */
+    * gate below can refuse a contended pass and capture again.
+    * `skipped`: the mt8 probe never came into band, so no query ran
+    * (no results, zero wall and foreign CPU, post probes = pre). */
   private final case class Capture(
       results: Seq[(String, Double)], failed: Seq[String],
       wallSec: Double, foreignCpu: Double,
       probePre: Double, probePreInBand: Boolean, probeAttempts: Int,
       probePost: Double, probeMtPre: Double, probeMtPost: Double,
-      probeMtPreInBand: Boolean, probeMtAttempts: Int)
+      probeMtPreInBand: Boolean, probeMtAttempts: Int,
+      skipped: Boolean = false)
 
   def main(args: Array[String]): Unit = {
     // second CLI arg (dev loops from a persistent sbt shell): sfDir
@@ -284,7 +287,7 @@ object Bench {
         s"subset names missing from the query registry: ${unknown.mkString(", ")}")
     }
 
-    def runCapture(): Capture = {
+    def runCapture(last: Boolean): Capture = {
       // CPU-probe gate (VERDICT r12 #1): refuse to start on an
       // out-of-band machine window — re-probe with backoff until the
       // shared VM calms down, and stamp the probe into the JSON either
@@ -293,6 +296,14 @@ object Bench {
       val (probePre, probePreInBand, probeAttempts) = probeGate()
       mtProbeSec() // discarded: thread-spawn + JIT warmup
       val (probeMtPre, probeMtPreInBand, mtAttempts) = mtProbeGate()
+      // an mt8 probe still out of band after its backoff fails mtOk
+      // whatever the queries do: skip the doomed pass while a
+      // re-capture remains (the last allowed capture still runs, and is
+      // stamped contended)
+      if (!probeMtPreInBand && !last)
+        return Capture(Nil, Nil, 0.0, 0.0, probePre, probePreInBand, probeAttempts,
+          probePre, probeMtPre, probeMtPre, probeMtPreInBand, mtAttempts,
+          skipped = true)
       try markCpu() catch { case _: Throwable => () }
       val failed = scala.collection.mutable.ArrayBuffer.empty[String]
       val wallT0 = System.nanoTime()
@@ -356,11 +367,15 @@ object Bench {
     def mtOk(c: Capture): Boolean = c.probeMtPreInBand &&
       c.probeMtPost >= mtProbeBand._1 && c.probeMtPost <= mtProbeBand._2
     val rejected = scala.collection.mutable.ArrayBuffer.empty[Capture]
-    var cap = runCapture()
+    var cap = runCapture(last = maxCaptures <= 1)
     while ((cap.foreignCpu > foreignLimit(cap) || !mtOk(cap)) &&
         rejected.size + 1 < maxCaptures) {
       val why =
-        if (cap.foreignCpu > foreignLimit(cap))
+        if (cap.skipped)
+          f"mt8 probe ${cap.probeMtPre}%.3f s still outside band " +
+            f"[${mtProbeBand._1}%.2f, ${mtProbeBand._2}%.2f] after " +
+            s"${cap.probeMtAttempts} attempts, query pass skipped"
+        else if (cap.foreignCpu > foreignLimit(cap))
           f"foreign_cpu_sec ${cap.foreignCpu}%.1f exceeds limit " +
             f"${foreignLimit(cap)}%.1f (= $foreignFrac x wall " +
             f"${cap.wallSec}%.1f s x $cpus cores)"
@@ -372,19 +387,23 @@ object Bench {
         "backing off 30 s and re-capturing")
       rejected += cap
       Thread.sleep(30000)
-      cap = runCapture()
+      cap = runCapture(last = rejected.size + 1 >= maxCaptures)
     }
     // still over after maxCaptures passes: stamp it contended and route
     // the full map AWAY from the committed snapshot name (see outName)
     val contended = cap.foreignCpu > foreignLimit(cap) || !mtOk(cap)
     if (contended)
       System.err.println(f"[bench] still contended after ${rejected.size + 1} " +
-        f"captures (foreign_cpu_sec ${cap.foreignCpu}%.1f) — stamping " +
+        f"captures (foreign_cpu_sec ${cap.foreignCpu}%.1f, limit " +
+        f"${foreignLimit(cap)}%.1f; mt8 probe ${cap.probeMtPre}%.3f/" +
+        f"${cap.probeMtPost}%.3f s, band [${mtProbeBand._1}%.2f, " +
+        f"${mtProbeBand._2}%.2f]) — stamping " +
         "capture_contended and writing the .contended snapshot")
 
     val results = cap.results
     val failed = cap.failed
     val wallSec = cap.wallSec
+    // a pass skipped for the mt8 probe shows here as wall_sec 0
     val rejJson = rejected.map(r =>
       s"""{"wall_sec":${fmt(r.wallSec)},"foreign_cpu_sec":${fmt(r.foreignCpu)}}""")
       .mkString("[", ",", "]")

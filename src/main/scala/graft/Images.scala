@@ -512,8 +512,7 @@ object Images {
     val raster = reader.readRaster(0, null)
     val (w, h) = (raster.getWidth, raster.getHeight)
     val ycck = adobeTransform > 0 // 2 = YCCK; jdapimin: nonzero ⇒ YCCK
-    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    val dst = new Array[Int](w)
+    val (out, px) = intImage(w, h)
     val row = new Array[Int](4 * w)
     // libjpeg6b build_ycc_rgb_table: FIX(x) = round(x·2^16), ONE_HALF
     // added before the arithmetic right shift
@@ -539,10 +538,9 @@ object Images {
         val r = nk - mulDiv255(c, nk)
         val g = nk - mulDiv255(m, nk)
         val b = nk - mulDiv255(yl, nk)
-        dst(x) = (r << 16) | (g << 8) | b
+        px(y * w + x) = (r << 16) | (g << 8) | b
         x += 1
       }
-      out.setRGB(0, y, w, 1, dst, 0, w)
       y += 1
     }
     out
@@ -686,7 +684,7 @@ object Images {
         off.toLong + 4L * w * h > bytes.length)
       throw new IllegalArgumentException("not enough image data")
     val (ri, gi, bi, ai) = layout
-    val out = new BufferedImage(w, h,
+    val (out, px) = intImage(w, h,
       if (ai >= 0) BufferedImage.TYPE_INT_ARGB else BufferedImage.TYPE_INT_RGB)
     var y = 0
     while (y < h) {
@@ -694,9 +692,9 @@ object Images {
       var x = 0
       while (x < w) {
         val o = base + 4 * x
-        val a = if (ai >= 0) bytes(o + ai) & 0xff else 0xff
-        out.setRGB(x, y, (a << 24) | ((bytes(o + ri) & 0xff) << 16) |
-          ((bytes(o + gi) & 0xff) << 8) | (bytes(o + bi) & 0xff))
+        val a = if (ai >= 0) (bytes(o + ai) & 0xff) << 24 else 0
+        px(y * w + x) = a | ((bytes(o + ri) & 0xff) << 16) |
+          ((bytes(o + gi) & 0xff) << 8) | (bytes(o + bi) & 0xff)
         x += 1
       }
       y += 1
@@ -793,10 +791,9 @@ object Images {
     * PIL (the unpackers set A = 255). */
   private def bmp16Expand(img: BufferedImage, is565: Boolean): BufferedImage = {
     val (w, h) = (img.getWidth, img.getHeight)
-    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val (out, px) = intImage(w, h)
     val raster = img.getRaster
     val gMax = if (is565) 63 else 31
-    val dst = new Array[Int](w)
     var y = 0
     while (y < h) {
       var x = 0
@@ -804,10 +801,9 @@ object Images {
         val r = raster.getSample(x, y, 0) * 255 / 31
         val g = raster.getSample(x, y, 1) * 255 / gMax
         val b = raster.getSample(x, y, 2) * 255 / 31
-        dst(x) = (r << 16) | (g << 8) | b
+        px(y * w + x) = (r << 16) | (g << 8) | b
         x += 1
       }
-      out.setRGB(0, y, w, 1, dst, 0, w)
       y += 1
     }
     out
@@ -823,10 +819,9 @@ object Images {
     * the standard Pillow paste arithmetic. */
   private def rgb16HighBytes(img: BufferedImage): BufferedImage = {
     val (w, h) = (img.getWidth, img.getHeight)
-    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val (out, px) = intImage(w, h)
     val raster = img.getRaster
     val hasAlpha = raster.getNumBands >= 4
-    val dst = new Array[Int](w)
     var y = 0
     while (y < h) {
       var x = 0
@@ -834,7 +829,7 @@ object Images {
         val r = raster.getSample(x, y, 0) >> 8
         val g = raster.getSample(x, y, 1) >> 8
         val b = raster.getSample(x, y, 2) >> 8
-        dst(x) =
+        px(y * w + x) =
           if (!hasAlpha) (r << 16) | (g << 8) | b
           else {
             val a = raster.getSample(x, y, 3) >> 8
@@ -844,7 +839,6 @@ object Images {
           }
         x += 1
       }
-      out.setRGB(0, y, w, 1, dst, 0, w)
       y += 1
     }
     out
@@ -863,7 +857,7 @@ object Images {
     * round-11 review. */
   private def grayDropAlpha(img: BufferedImage): BufferedImage = {
     val (w, h) = (img.getWidth, img.getHeight)
-    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val (out, px) = intImage(w, h)
     val r = img.getRaster
     val lut = img.getColorModel match {
       case icm: java.awt.image.IndexColorModel =>
@@ -880,7 +874,7 @@ object Images {
       while (x < w) {
         val s = r.getSample(x, y, 0)
         val g = if (lut != null) lut(s) else s >> shift
-        out.setRGB(x, y, (g << 16) | (g << 8) | g)
+        px(y * w + x) = (g << 16) | (g << 8) | g
         x += 1
       }
       y += 1
@@ -892,7 +886,7 @@ object Images {
     * Pillow's paste rounding, fg·a/255 + 255·(255−a)/255. */
   private def grayCompositeWhite(img: BufferedImage): BufferedImage = {
     val (w, h) = (img.getWidth, img.getHeight)
-    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val (out, px) = intImage(w, h)
     val r = img.getRaster
     val nb = r.getNumBands
     val shift = math.max(0, r.getSampleModel.getSampleSize(0) - 8)
@@ -903,7 +897,7 @@ object Images {
         val g = r.getSample(x, y, 0) >> shift
         val a = if (nb > 1) r.getSample(x, y, nb - 1) >> shift else 255
         val v = mulDiv255(g, a) + (255 - a) // white term is exact
-        out.setRGB(x, y, (v << 16) | (v << 8) | v)
+        px(y * w + x) = (v << 16) | (v << 8) | v
         x += 1
       }
       y += 1
@@ -913,18 +907,111 @@ object Images {
 
   /** Mode "RGB"+tRNS: the transparency key is ignored — keep raw RGB. */
   private def stripAlpha(img: BufferedImage): BufferedImage = {
-    val (w, h) = (img.getWidth, img.getHeight)
-    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        out.setRGB(x, y, img.getRGB(x, y) & 0xffffff)
-        x += 1
-      }
-      y += 1
-    }
+    val (out, px) = intImage(img.getWidth, img.getHeight)
+    readArgb(img, px)
+    var i = 0
+    while (i < px.length) { px(i) &= 0xffffff; i += 1 }
     out
+  }
+
+  /** A fresh `TYPE_INT_RGB` (or `TYPE_INT_ARGB`) image and its backing
+    * array — row-major, stride w, offset 0 — so the decode branches
+    * write packed pixels straight into it instead of through the
+    * per-pixel `ColorModel` calls of `setRGB`. */
+  private def intImage(w: Int, h: Int,
+      imageType: Int = BufferedImage.TYPE_INT_RGB): (BufferedImage, Array[Int]) = {
+    val img = new BufferedImage(w, h, imageType)
+    (img, img.getRaster.getDataBuffer.asInstanceOf[java.awt.image.DataBufferInt].getData)
+  }
+
+  /** An sRGB image whose one-bank raster starts at its data buffer's
+    * origin — not a `getSubimage` view — so its pixels can be read
+    * from the buffer by the sample model's own layout. */
+  private def plainRaster(img: BufferedImage): Boolean = {
+    val r = img.getRaster
+    r.getSampleModelTranslateX == 0 && r.getSampleModelTranslateY == 0 &&
+      r.getDataBuffer.getNumBanks == 1 && img.getColorModel.getColorSpace.isCS_sRGB
+  }
+
+  /** The backing array of a `TYPE_INT_RGB`/`TYPE_INT_ARGB` image laid
+    * out like [[intImage]]'s (a plain raster, no padding); None for
+    * anything else. */
+  private def intPixels(img: BufferedImage): Option[Array[Int]] =
+    (img.getRaster.getDataBuffer, img.getRaster.getSampleModel) match {
+      case (db: java.awt.image.DataBufferInt,
+            sm: java.awt.image.SinglePixelPackedSampleModel)
+          if (img.getType == BufferedImage.TYPE_INT_RGB ||
+              img.getType == BufferedImage.TYPE_INT_ARGB) &&
+            plainRaster(img) && db.getOffset == 0 &&
+            sm.getScanlineStride == img.getWidth &&
+            db.getData.length == img.getWidth * img.getHeight =>
+        Some(db.getData)
+      case _ => None
+    }
+
+  /** `img.getRGB(0, 0, w, h, dst, 0, w)` — straight (non-premultiplied)
+    * ARGB, row-major — read directly from the raster for the standard
+    * 8-bit sRGB layouts the decoders produce: `TYPE_3BYTE_BGR` and
+    * `TYPE_4BYTE_ABGR` through the sample model's band offsets, pixel
+    * stride and scanline stride; `TYPE_INT_RGB`/`TYPE_INT_ARGB` through
+    * the `DataBufferInt`; `TYPE_BYTE_INDEXED` through a 256-entry table
+    * of `cm.getRGB(i)` — which, unlike `getRGBs` (only `getMapSize`
+    * entries), also covers raster indices past a short palette exactly
+    * as `getRGB` resolves them. Every other layout, and any raster with
+    * a sample-model translate (a `getSubimage` view), goes through
+    * `getRGB`. For these layouts `getRGB` is a pure table/bit read — no
+    * color conversion — so both routes give the same ints. */
+  private[graft] def readArgb(img: BufferedImage, dst: Array[Int]): Unit = {
+    val (w, h) = (img.getWidth, img.getHeight)
+    val r = img.getRaster
+    (intPixels(img), img.getType, r.getDataBuffer, r.getSampleModel) match {
+      case (Some(src), BufferedImage.TYPE_INT_ARGB, _, _) =>
+        System.arraycopy(src, 0, dst, 0, w * h)
+      case (Some(src), _, _, _) => // TYPE_INT_RGB: opaque
+        var i = 0
+        while (i < src.length) { dst(i) = 0xff000000 | src(i); i += 1 }
+      case (None, BufferedImage.TYPE_3BYTE_BGR | BufferedImage.TYPE_4BYTE_ABGR,
+            db: java.awt.image.DataBufferByte, sm: java.awt.image.ComponentSampleModel)
+          if plainRaster(img) =>
+        val data = db.getData
+        val off = sm.getBandOffsets
+        val (ro, go, bo) = (off(0), off(1), off(2))
+        val ao = if (off.length > 3) off(3) else -1
+        val (ps, ss) = (sm.getPixelStride, sm.getScanlineStride)
+        var y = 0
+        while (y < h) {
+          var o = db.getOffset + y * ss
+          var i = y * w
+          val end = i + w
+          while (i < end) {
+            val a = if (ao >= 0) data(o + ao) & 0xff else 0xff
+            dst(i) = (a << 24) | ((data(o + ro) & 0xff) << 16) |
+              ((data(o + go) & 0xff) << 8) | (data(o + bo) & 0xff)
+            o += ps
+            i += 1
+          }
+          y += 1
+        }
+      case (None, BufferedImage.TYPE_BYTE_INDEXED,
+            db: java.awt.image.DataBufferByte, sm: java.awt.image.ComponentSampleModel)
+          if plainRaster(img) && sm.getNumBands == 1 && sm.getPixelStride == 1 =>
+        val cm = img.getColorModel
+        val lut = Array.tabulate(256)(i => cm.getRGB(i))
+        val data = db.getData
+        var y = 0
+        while (y < h) {
+          var o = db.getOffset + y * sm.getScanlineStride
+          var i = y * w
+          val end = i + w
+          while (i < end) {
+            dst(i) = lut(data(o) & 0xff)
+            o += 1
+            i += 1
+          }
+          y += 1
+        }
+      case _ => img.getRGB(0, 0, w, h, dst, 0, w)
+    }
   }
 
   /** R5 (appV2.py:20-27): force RGB, compositing any alpha over white
@@ -937,9 +1024,16 @@ object Images {
     * round-trip — can differ from Pillow by ±1 per channel at
     * a ∈ 1..254, a divergence the committed expectation digests would
     * have baked in silently. Covers RGBA PNGs (color type 6), palette
-    * PNGs with 8-bit tRNS alpha (type 3 — `img.getRGB` applies the
-    * palette lookup, PIL's convert("RGBA") equivalent), GIF binary
-    * transparency, and decoded WebP-alpha stills.
+    * PNGs with 8-bit tRNS alpha (type 3 — the palette lookup is PIL's
+    * convert("RGBA") equivalent), GIF binary transparency, and decoded
+    * WebP-alpha stills.
+    *
+    * The source ARGB comes from [[readArgb]] (a direct raster read for
+    * the standard 8-bit sRGB layouts, `getRGB` otherwise — straight
+    * alpha either way: the PNG/GIF/BMP ImageIO color models and the
+    * engine's own WebP surface are not premultiplied, so no precision
+    * is lost), is written into the output's own pixel array, and is
+    * composited there in place.
     *
     * Alphaless GRAY rasters (grayscale JPEG/BMP — mode "L" to PIL)
     * take the raw-band-replication fast path instead: `getRGB` would
@@ -951,49 +1045,66 @@ object Images {
     if (!cm.hasAlpha &&
         cm.getColorSpace.getType == java.awt.color.ColorSpace.TYPE_GRAY)
       return grayDropAlpha(img)
-    val (w, h) = (img.getWidth, img.getHeight)
-    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    // non-premultiplied ARGB — PNG/GIF/BMP ImageIO color models and the
-    // engine's own WebP surface are straight-alpha, so no precision is
-    // lost un-premultiplying here
-    val argb = img.getRGB(0, 0, w, h, null, 0, w)
-    val dst = new Array[Int](w * h)
+    val (out, px) = intImage(img.getWidth, img.getHeight)
+    readArgb(img, px)
     var i = 0
-    while (i < argb.length) {
-      val p = argb(i)
+    while (i < px.length) {
+      val p = px(i)
       val a = p >>> 24
-      if (a == 255) dst(i) = p & 0xffffff
+      if (a == 255) px(i) = p & 0xffffff
       else {
         val inv = 255 - a
         val r = mulDiv255((p >> 16) & 0xff, a) + inv
         val g = mulDiv255((p >> 8) & 0xff, a) + inv
         val b = mulDiv255(p & 0xff, a) + inv
-        dst(i) = (r << 16) | (g << 8) | b
+        px(i) = (r << 16) | (g << 8) | b
       }
       i += 1
     }
-    out.setRGB(0, 0, w, h, dst, 0, w)
     out
   }
 
-  /** R6 (appV2.py:29-36): centered paste on a white max(w,h)² canvas —
-    * the (s−w)//2 integer arithmetic matches the reference. */
+  /** The packed 0xRRGGBB pixels of an opaque RGB image, row-major: the
+    * backing array itself for [[pilEnsureRgb]]'s `TYPE_INT_RGB` output
+    * (read-only by contract — callers never write to it), a `getRGB`
+    * copy for any other image. */
+  private def rgbPixels(img: BufferedImage): Array[Int] =
+    intPixels(img).filter(_ => img.getType == BufferedImage.TYPE_INT_RGB)
+      .getOrElse(img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth))
+
+  /** R6 (appV2.py:29-36) in the int domain: `src` (w×h, row-major)
+    * pasted onto a white s×s canvas `dst`, s = max(w, h), at
+    * ((s−w)/2, (s−h)/2) — the reference's (s−w)//2 integer arithmetic.
+    * One `System.arraycopy` per source row; only the margins are
+    * filled. */
+  private def padSquareInto(src: Array[Int], w: Int, h: Int, dst: Array[Int]): Unit = {
+    val s = math.max(w, h)
+    val (x0, y0) = ((s - w) / 2, (s - h) / 2)
+    val white = 0xffffff
+    java.util.Arrays.fill(dst, 0, y0 * s, white)
+    var y = 0
+    while (y < h) {
+      val row = (y0 + y) * s
+      java.util.Arrays.fill(dst, row, row + x0, white)
+      System.arraycopy(src, y * w, dst, row + x0, w)
+      java.util.Arrays.fill(dst, row + x0 + w, row + s, white)
+      y += 1
+    }
+    java.util.Arrays.fill(dst, (y0 + h) * s, s * s, white)
+  }
+
+  /** R6 (appV2.py:29-36): centered paste of an opaque RGB image (a
+    * [[pilEnsureRgb]] result) on a white max(w,h)² `TYPE_INT_RGB`
+    * canvas, through [[padSquareInto]]. A square input comes back
+    * as is. */
   private[graft] def padSquare(img: BufferedImage): BufferedImage = {
     val (w, h) = (img.getWidth, img.getHeight)
     if (w == h) return img
-    val s = math.max(w, h)
-    val out = new BufferedImage(s, s, BufferedImage.TYPE_INT_RGB)
-    val g = out.createGraphics()
-    g.setColor(java.awt.Color.WHITE)
-    g.fillRect(0, 0, s, s)
-    g.drawImage(img, (s - w) / 2, (s - h) / 2, null)
-    g.dispose()
+    val (out, px) = intImage(math.max(w, h), math.max(w, h))
+    padSquareInto(rgbPixels(img), w, h, px)
     out
   }
 
-  /** R7 (appV2.py:38-49): bicubic resize → /255 → CHW → RGB→BGR →
-    * (x−0.5)/0.5. Returns the flat CHW float tensor (batch dim implicit —
-    * Spark's row-per-image IS the batch axis). */
   /** PIL-parity decompression-bomb guard for the ImageIO formats
     * (png/jpg/bmp/gif): reads ONLY the header via the format's
     * ImageReader and rejects above 2 × PIL.Image.MAX_IMAGE_PIXELS =
@@ -1121,17 +1232,34 @@ object Images {
     } finally iis.close()
   }
 
+  /** R5-R7 (appV2.py:20-49): decode ([[readGuarded]]) → RGB on white
+    * ([[pilEnsureRgb]]) → pad to a white square → bicubic resize → /255
+    * → CHW → RGB→BGR → (x−0.5)/0.5. Returns the flat CHW float tensor
+    * (batch dim implicit — Spark's row-per-image IS the batch axis).
+    *
+    * One packed 0xRRGGBB `Array[Int]` carries the pixels from
+    * [[pilEnsureRgb]]'s `TYPE_INT_RGB` buffer (read in place, no
+    * `getRGB`) through the int-domain pad ([[padSquareInto]] — the only
+    * full-frame copy, skipped for square images) into the resize; no
+    * Java2D canvas or per-pixel `ColorModel` call sits on the path. */
   def preprocess(bytes: Array[Byte], targetSize: Int = 448): Array[Float] = {
     val decoded = readGuarded(bytes)
     if (decoded == null) throw new IllegalArgumentException("undecodable image bytes")
-    val squared = padSquare(pilEnsureRgb(bytes, decoded))
+    val rgb = pilEnsureRgb(bytes, decoded)
+    val (w, h) = (rgb.getWidth, rgb.getHeight)
+    val s = math.max(w, h)
+    val srcPix =
+      if (w == h) rgbPixels(rgb)
+      else {
+        val sq = new Array[Int](s * s)
+        padSquareInto(rgbPixels(rgb), w, h, sq)
+        sq
+      }
     // PIL-parity resize (appV2.py:41 image.resize(target, BICUBIC)):
     // graft.images.PilResample — antialiased scaled-support bicubic,
     // PIL's own fixed-point arithmetic. Java2D's BICUBIC hint samples a
     // fixed 4x4 neighborhood regardless of ratio and ALIASES on real
     // photo downscales — a systematic tensor divergence, not noise.
-    val s = squared.getWidth
-    val srcPix = squared.getRGB(0, 0, s, s, null, 0, s)
     val resizedPix = graft.images.PilResample.resizeRgb(
       srcPix, s, s, targetSize, targetSize)
     val n = targetSize * targetSize

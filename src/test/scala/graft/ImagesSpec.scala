@@ -987,6 +987,91 @@ class ImagesSpec extends SparkSpec {
     assert(t(0) === 1.0f)
   }
 
+  test("R5 raster read: readArgb equals getRGB pixel for pixel on every " +
+      "direct layout, a short palette, and the getRGB fallbacks") {
+    import java.awt.image.{BufferedImage => BI}
+    val rnd = new scala.util.Random(11)
+    val (w, h) = (13, 7)
+    def noise(t: Int, iw: Int = w, ih: Int = h): BI = {
+      val img = new BI(iw, ih, t)
+      for (y <- 0 until ih; x <- 0 until iw) img.setRGB(x, y, rnd.nextInt())
+      img
+    }
+    // 16-entry palette (random alpha) over a raster holding indices past
+    // the palette and past 127: getRGB resolves those through the color
+    // model's own table and pixel mask, which getRGBs would not copy
+    def shortPalette(bits: Int): BI = {
+      val icm = new java.awt.image.IndexColorModel(bits, 16,
+        Array.fill(16)(rnd.nextInt()), 0, true, -1, java.awt.image.DataBuffer.TYPE_BYTE)
+      val img = new BI(w, h, BI.TYPE_BYTE_INDEXED, icm)
+      for (y <- 0 until h; x <- 0 until w)
+        img.getRaster.setSample(x, y, 0, (y * w + x) * 37 % 256)
+      img.getRaster.setSample(0, 0, 0, 255)
+      img
+    }
+    val cases = Seq(
+      "3BYTE_BGR" -> noise(BI.TYPE_3BYTE_BGR),
+      "4BYTE_ABGR" -> noise(BI.TYPE_4BYTE_ABGR),
+      "INT_RGB" -> noise(BI.TYPE_INT_RGB),
+      "INT_ARGB" -> noise(BI.TYPE_INT_ARGB),
+      "BYTE_INDEXED 4-bit" -> shortPalette(4),
+      "BYTE_INDEXED 8-bit" -> shortPalette(8),
+      "BYTE_GRAY" -> noise(BI.TYPE_BYTE_GRAY),
+      "3BYTE_BGR getSubimage" -> noise(BI.TYPE_3BYTE_BGR, 20, 11).getSubimage(3, 2, w, h),
+      "INT_RGB getSubimage" -> noise(BI.TYPE_INT_RGB, 20, 11).getSubimage(5, 1, w, h))
+    assert(cases.count(_._2.getType == BI.TYPE_BYTE_INDEXED) === 2,
+      "precondition: both short palettes are TYPE_BYTE_INDEXED")
+    for ((name, img) <- cases) {
+      val got = new Array[Int](w * h)
+      Images.readArgb(img, got)
+      assert(got.toSeq === img.getRGB(0, 0, w, h, null, 0, w).toSeq, name)
+    }
+  }
+
+  /** The pad → resize → tensor tail of `preprocess` as it ran before the
+    * packed-pixel path: a Java2D white canvas, `drawImage`, `getRGB`. */
+  private def java2dPreprocess(bytes: Array[Byte], t: Int): Array[Float] = {
+    val img = Images.pilEnsureRgb(bytes, Images.readGuarded(bytes))
+    val (w, h) = (img.getWidth, img.getHeight)
+    val s = math.max(w, h)
+    val sq = new java.awt.image.BufferedImage(s, s, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val g = sq.createGraphics()
+    g.setColor(java.awt.Color.WHITE)
+    g.fillRect(0, 0, s, s)
+    g.drawImage(img, (s - w) / 2, (s - h) / 2, null)
+    g.dispose()
+    val px = graft.images.PilResample.resizeRgb(sq.getRGB(0, 0, s, s, null, 0, s), s, s, t, t)
+    val n = t * t
+    val out = new Array[Float](3 * n)
+    for (i <- 0 until n) {
+      out(i) = (px(i) & 0xff) / 255.0f * 2f - 1f
+      out(n + i) = ((px(i) >> 8) & 0xff) / 255.0f * 2f - 1f
+      out(2 * n + i) = ((px(i) >> 16) & 0xff) / 255.0f * 2f - 1f
+    }
+    out
+  }
+
+  test("R5-R7 preprocess equals the Java2D pad/getRGB chain it replaced — " +
+      "landscape, portrait, square, odd and 1×N images in JPEG, PNG, BMP, GIF") {
+    import java.awt.image.{BufferedImage => BI}
+    val rnd = new scala.util.Random(5)
+    // odd s−w / s−h (31×18, 17×40) pin the (s−w)/2 rounding of the pad
+    val sizes = Seq((48, 30), (30, 48), (32, 32), (31, 18), (17, 40), (1, 23), (23, 1))
+    // png carries fractional alpha (the white composite before the pad)
+    val formats = Seq("jpg" -> BI.TYPE_INT_RGB, "png" -> BI.TYPE_INT_ARGB,
+      "bmp" -> BI.TYPE_3BYTE_BGR, "gif" -> BI.TYPE_BYTE_INDEXED)
+    for ((w, h) <- sizes; (fmt, t) <- formats) {
+      val src = new BI(w, h, t)
+      for (y <- 0 until h; x <- 0 until w) src.setRGB(x, y, rnd.nextInt())
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(src, fmt, bos), s"no $fmt writer")
+      val bytes = bos.toByteArray
+      for (target <- Seq(16, 37))
+        assert(Images.preprocess(bytes, target).toSeq ===
+          java2dPreprocess(bytes, target).toSeq, s"${w}x$h $fmt → $target")
+    }
+  }
+
   test("R8+R16 scoring: per-row error isolation, deterministic fixture logits") {
     val scored: Map[String, (Option[Seq[Float]], String)] =
       Images.scoreImages(Images.source(spark, dir), Images.FixtureScorer(32))
